@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Enrich, LogParse, Report}
@@ -43,20 +43,24 @@ object Pipeline {
   }
 
   /** Incremental batch run: offset-tailed read → extract → CSV append →
-    * offset persisted (the reference's main-loop contract: state written
-    * only after a successful extraction, bin/maillogsentinel.py:714-746 —
-    * here the offset write happens inside incrementalRead *before* the
-    * append; crash between the two re-reads nothing but loses the batch,
-    * i.e. at-most-once. Streaming mode (graft.streaming.LogStream) gives
-    * the at-least-once + idempotent-sink upgrade.) */
+    * offset persisted, in one Spark execution. The offset moves only after
+    * the append has succeeded — the reference's main-loop contract
+    * (bin/maillogsentinel.py:714-746) and Structured Streaming's
+    * commit-after-sink: a crash before the commit replays the batch
+    * (at-least-once), and a half-written last line is left for the next
+    * run. The row count is observed on the write itself, so parse and
+    * enrich (rDNS included) run once. */
   def runIncremental(spark: SparkSession, logFile: java.nio.file.Path,
                      stateFile: java.nio.file.Path, csvOut: String,
                      year: Int, geo: Option[GeoDims] = None,
                      resolver: Option[Enrich.Resolver] = None): Long = {
-    val lines = LogSource.incrementalRead(spark, logFile, stateFile)
-    val events = extract(lines, year, geo, resolver)
-    EventsCsv.append(events, csvOut)
-    events.count()
+    val (lines, newOffset) = LogSource.pendingRead(spark, logFile, stateFile)
+    val rows = Observation()
+    EventsCsv.append(extract(lines, year, geo, resolver)
+      .observe(rows, count(lit(1)).as("n")), csvOut)
+    val n = rows.get("n").asInstanceOf[Long]
+    LogSource.writeOffset(stateFile, newOffset)
+    n
   }
 
   /** One-line per-run summary — the reference's end-of-run log lines
